@@ -12,11 +12,16 @@ import org.apache.spark.sql.types.StructType
   * replace it without touching callers).
   *
   * Layout: `root/<table>/v<N>/part-*.parquet` plus a `_latest` pointer
-  * file holding N. Reads resolve the pointer; appends add part-files to
-  * the current version (parquet append); mutations (update/delete) write
-  * a full new version directory and then atomically swing the pointer —
-  * readers never observe a half-written table, which is the same
-  * snapshot-isolation trick every table format (Delta/Iceberg/Hudi) uses.
+  * file holding N. Reads resolve the pointer, then open `v<N>` on the
+  * driver ([[org.apache.spark.sql.graft.LocalParquet.openSnapshot]]: a
+  * java.nio walk plus one footer read, no Spark job) into the same
+  * relation `spark.read.parquet` would build; nothing is cached between
+  * reads, so each one sees exactly the files on disk at that moment.
+  * Appends add part-files to the current version (parquet append);
+  * mutations (update/delete) write a full new version directory and then
+  * atomically swing the pointer — readers never observe a half-written
+  * table, which is the same snapshot-isolation trick every table format
+  * (Delta/Iceberg/Hudi) uses.
   * The reference delegated all this to MongoDB
   * (`adapters/MongodbAdapter.scala:36-65`); an immutable-file engine has
   * to do it with snapshots.
@@ -61,21 +66,31 @@ final class Warehouse(val spark: SparkSession, val root: String,
   def read(name: String): DataFrame = {
     val v = currentVersion(name)
     require(v >= 0, s"table $name does not exist in $root")
-    spark.read.parquet(versionDir(name, v).toString).drop(Warehouse.BucketCol)
+    snapshot(name, v).drop(Warehouse.BucketCol)
   }
 
-  /** Partition-pruned read of a run-bucketed table: only the named runs'
-    * hash-bucket directories are listed/scanned — the right entry point
-    * for point lookups (file download, per-run unit reads) where
-    * [[read]] would touch every bucket. Falls back to [[read]] for
-    * unbucketed tables. */
+  /** A version directory as a DataFrame, resolved on the driver;
+    * `spark.read.parquet` only for a directory with no data file, so
+    * that case fails with Spark's own error, as it always did. */
+  private def snapshot(name: String, version: Int): DataFrame = {
+    val dir = versionDir(name, version)
+    org.apache.spark.sql.graft.LocalParquet.openSnapshot(spark, dir)
+      .getOrElse(spark.read.parquet(dir.toString))
+  }
+
+  /** Partition-pruned read of a run-bucketed table: the bucket filter
+    * reaches the scan as a partition filter, so only the named runs'
+    * hash-bucket directories are scanned — the right entry point for
+    * point lookups (file download, per-run unit reads) where [[read]]
+    * would scan every bucket. Listing is the driver-side walk every read
+    * makes. Falls back to [[read]] for unbucketed tables. */
   def readForRuns(name: String, runIds: Seq[String]): DataFrame =
     if (!Warehouse.isRunBucketed(name)) read(name)
     else {
       val buckets = runIds.map(Warehouse.bucketOf).distinct
       val v = currentVersion(name)
       require(v >= 0, s"table $name does not exist in $root")
-      spark.read.parquet(versionDir(name, v).toString)
+      snapshot(name, v)
         .filter(col(Warehouse.BucketCol).isin(buckets: _*))
         .drop(Warehouse.BucketCol)
     }
@@ -92,7 +107,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     val dir = versionDir(name, version)
     require(Files.exists(dir),
       s"version $version of $name is not retained (current: ${currentVersion(name)})")
-    spark.read.parquet(dir.toString).drop(Warehouse.BucketCol)
+    snapshot(name, version).drop(Warehouse.BucketCol)
   }
 
   /** Compaction: appends accumulate one part-file batch per call (the
@@ -222,7 +237,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     val nextDir = versionDir(name, next)
 
     // partition pruning makes this read touch only the scoped directories
-    val touched = spark.read.parquet(prevDir.toString)
+    val touched = snapshot(name, v)
       .filter(col(pcol).cast("string").isin(partitionValues: _*))
       .drop(Warehouse.BucketCol)
     write(f(touched), name, nextDir.toString, SaveMode.Overwrite)

@@ -133,6 +133,11 @@ class IngestSpec extends SparkSpec {
       ing.upload(fixture("plain/plain.json"), "p.json", "nope", avg)
   }
 
+  "Ingest.unitId" should "join its parts with a NUL character" in {
+    Ingest.unitId("a", "b") shouldBe Ingest.md5Hex("a\u0000b")
+    Ingest.unitId("a", "b") shouldBe "70350f6027bce3713f6b76473084309b"
+  }
+
   "bulkIngest" should "ingest a batch engine-side with keep-first dedup" in {
     import spark.implicits._
     val (wh, ing) = freshIngestor()
@@ -286,5 +291,18 @@ class IngestSpec extends SparkSpec {
     wh.rewrite("t", identity)
     java.nio.file.Files.exists(
       java.nio.file.Paths.get(root, "t", "v0")) shouldBe false
+  }
+
+  "job-count guards" should "bound an upload and a duplicate upload" in {
+    val (_, ing) = freshIngestor()
+    val first = fixture("maple/maple_single_sample_single_rg.json")
+    ing.upload(first, "a.json", "maple", avg)
+    val (_, uploadJobs) = jobsIn(ing.upload(
+      fixture("maple/maple_multi_sample_multi_rg.json"), "b.json", "maple", avg))
+    val (dup, dupJobs) = jobsIn(intercept[Ingest.DuplicateFileException](
+      ing.upload(first, "a-again.json", "maple", avg)))
+    dup.existingRunId should not be empty
+    uploadJobs should be <= 7 // 8 before driver-side snapshots
+    dupJobs should be <= 2    // 3 before
   }
 }

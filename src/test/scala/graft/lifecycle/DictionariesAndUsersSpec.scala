@@ -157,4 +157,14 @@ class DictionariesAndUsersSpec extends SparkSpec {
     UsersOps.authenticateByKey(wh, "dave", key).map(_.id) shouldBe Some("dave")
     UsersOps.authenticateByKey(wh, "dave", "bad") shouldBe None
   }
+
+  it should "authenticate by API key in one Spark job (two before driver-side snapshots)" in {
+    val (wh, _) = fresh()
+    UsersOps.addUser(wh, "erin", "erin@test.id", "Passw0rd", "Passw0rd")
+    val key = wh.read(Warehouse.Users).filter(col("id") === "erin")
+      .select("activeKey").collect()(0).getString(0)
+    val (user, jobs) = jobsIn(UsersOps.authenticateByKey(wh, "erin", key))
+    user.map(_.id) shouldBe Some("erin")
+    jobs should be <= 1
+  }
 }

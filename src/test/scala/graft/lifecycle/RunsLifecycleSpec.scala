@@ -376,4 +376,15 @@ class RunsLifecycleSpec extends SparkSpec {
       JsonPatch.parse(m.readTree("""{"op":"add","path":"no-slash","value":1}"""))
     a[PatchParseException] should be thrownBy JsonPatch.parse(m.readTree("[]"))
   }
+
+  "job-count guards" should "bound a propagating patch and a delete" in {
+    val (wh, runId) = freshRun()
+    val (counts, patchJobs) = jobsIn(RunsLifecycle.patchRun(wh, runId, avg,
+      List(ReplaceOp("/labels/runName", "Guarded"))))
+    counts shouldBe ((1, 2, 3))
+    val (_, deleteJobs) = jobsIn(RunsLifecycle.deleteRun(wh, runId, avg))
+    wh.read(Warehouse.samples("maple")).count() shouldBe 0
+    patchJobs should be <= 9  // 15 before driver-side snapshots
+    deleteJobs should be <= 8 // 13 before
+  }
 }

@@ -1,8 +1,13 @@
 package graft.store
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalParquet
+import org.apache.spark.sql.types.{IntegerType, StringType}
 
 import graft.SparkSpec
 
@@ -116,5 +121,160 @@ class WarehouseSpec extends SparkSpec {
     wh.readVersion("t", 1).count() shouldBe 10
     an[IllegalArgumentException] should be thrownBy wh.readVersion("t", 0)
     wh.commitMeta("t") shouldBe Map.empty
+  }
+
+  // --- driver-side snapshot resolution --------------------------------
+
+  private def versionDir(wh: Warehouse, name: String) =
+    Paths.get(wh.root, name, s"v${wh.currentVersion(name)}")
+
+  /** The driver-side resolver against `spark.read.parquet` on the same
+    * version dir: same schema (nullability, partition column types and
+    * metadata included), same files in the same order, same rows in the
+    * same order. Returns the resolved frame. */
+  private def assertParity(wh: Warehouse, name: String): DataFrame = {
+    val dir = versionDir(wh, name)
+    val viaSpark = spark.read.parquet(dir.toString)
+    val (resolved, jobs) = jobsIn(LocalParquet.openSnapshot(spark, dir).get)
+    jobs shouldBe 0
+    resolved.schema shouldBe viaSpark.schema
+    allFiles(resolved) shouldBe allFiles(viaSpark)
+    resolved.collect().toSeq shouldBe viaSpark.collect().toSeq
+    resolved
+  }
+
+  /** The files a frame's index lists, in its order. */
+  private def allFiles(df: DataFrame): Seq[String] =
+    df.queryExecution.analyzed.collect {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+        r.location.asInstanceOf[InMemoryFileIndex].allFiles().map(_.getPath.toString)
+    }.flatten
+
+  private def runIds(n: Int, tag: String) =
+    (0 until n).map(i => (s"$tag-$i", i.toLong, s"payload $i")).toDF("runId", "n", "s")
+
+  "the snapshot resolver" should "match spark.read.parquet on an unpartitioned table" in {
+    val wh = new Warehouse(spark, dir())
+    wh.append("t", frame(0))                   // driver-side fast path
+    wh.append("t", frame(1).repartition(3))    // Spark writer: 3 part files
+    wh.append("t", frame(2))
+    assertParity(wh, "t").count() shouldBe 30
+  }
+
+  it should "match on runs, partition type and escaped pipeline values included" in {
+    val wh = new Warehouse(spark, dir())
+    val runs = Seq(("r1", "maple", 1L), ("r2", "a/b c%=", 2L), ("r3", "pref", 3L))
+      .toDF("runId", "pipeline", "n")
+    wh.append(Warehouse.Runs, runs)
+    val df = assertParity(wh, Warehouse.Runs)
+    df.schema("pipeline").dataType shouldBe StringType
+    wh.read(Warehouse.Runs).filter(col("pipeline") === "a/b c%=")
+      .select("runId").as[String].collect() shouldBe Array("r2")
+  }
+
+  it should "match on a 64-bucket table, which Spark lists with a job of its own" in {
+    val wh = new Warehouse(spark, dir())
+    wh.append(Warehouse.Files, runIds(400, "a"))
+    wh.append(Warehouse.Files, runIds(50, "b"))
+    val buckets = Files.list(versionDir(wh, Warehouse.Files)).toArray
+      .count(_.toString.contains(s"${Warehouse.BucketCol}="))
+    buckets shouldBe Warehouse.NumBuckets
+    jobsIn(spark.read.parquet(versionDir(wh, Warehouse.Files).toString))._2 should be > 0
+    val df = assertParity(wh, Warehouse.Files)
+    df.schema(Warehouse.BucketCol).dataType shouldBe IntegerType
+    wh.read(Warehouse.Files).count() shouldBe 450
+  }
+
+  it should "match on 0-row tables" in {
+    val wh = new Warehouse(spark, dir())
+    wh.overwrite("local", frame(0).filter(lit(false)).limit(0))
+    wh.overwrite("dist", frame(0).repartition(2).filter(lit(false)))
+    assertParity(wh, "local").count() shouldBe 0
+    assertParity(wh, "dist").count() shouldBe 0
+  }
+
+  it should "match on a rewriteScoped result with a parked empty partition" in {
+    val wh = new Warehouse(spark, dir())
+    wh.append(Warehouse.Files, runIds(1, "only"))
+    wh.rewriteForRuns(Warehouse.Files, Seq("only-0"), _.filter(lit(false)))
+    Files.exists(versionDir(wh, Warehouse.Files).resolve(s"${Warehouse.BucketCol}=0")) shouldBe true
+    assertParity(wh, Warehouse.Files).count() shouldBe 0
+    wh.read(Warehouse.Files).columns.toSeq shouldBe Seq("runId", "n", "s")
+  }
+
+  it should "ignore bookkeeping and hidden files" in {
+    val wh = new Warehouse(spark, dir())
+    wh.overwrite("t", frame(0).repartition(2), Map("batch" -> "1")) // _SUCCESS, .crc, meta
+    val v = versionDir(wh, "t")
+    // not parquet: reading either one as data or for the schema would fail
+    Files.write(v.resolve("_tmp.parquet"), Array[Byte](1, 2, 3))
+    Files.write(v.resolve(".hidden.parquet"), Array[Byte](1, 2, 3))
+    val names = Files.list(v).toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+    names should contain allOf ("_SUCCESS", Warehouse.MetaFile)
+    names.exists(_.endsWith(".crc")) shouldBe true
+    val df = assertParity(wh, "t")
+    allFiles(df).foreach(f => f should (not include "/_" and not include "/."))
+    wh.read("t").count() shouldBe 10
+  }
+
+  it should "see appended files on the next read; a frame opened before keeps its snapshot" in {
+    val wh = new Warehouse(spark, dir())
+    wh.append(Warehouse.Files, runIds(10, "a"))
+    val before = wh.read(Warehouse.Files)
+    val beforeForRuns = wh.readForRuns(Warehouse.Files, Seq("b-0"))
+    wh.append(Warehouse.Files, runIds(5, "b").repartition(2))
+    before.count() shouldBe 10
+    beforeForRuns.filter(col("runId") === "b-0").count() shouldBe 0
+    wh.read(Warehouse.Files).count() shouldBe 15
+    wh.readForRuns(Warehouse.Files, Seq("b-0")).filter(col("runId") === "b-0")
+      .count() shouldBe 1
+  }
+
+  it should "keep readForRuns' bucket filter a partition filter of the scan" in {
+    val wh = new Warehouse(spark, dir())
+    wh.append(Warehouse.Files, runIds(200, "a"))
+    val df = wh.readForRuns(Warehouse.Files, Seq("a-7"))
+    val scans = df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    scans should have size 1
+    scans.head.partitionFilters.flatMap(_.references.map(_.name)) should
+      contain(Warehouse.BucketCol)
+    df.filter(col("runId") === "a-7").select("n").as[Long].collect() shouldBe Array(7L)
+  }
+
+  it should "open read, readForRuns and readVersion with no Spark job" in {
+    val wh = new Warehouse(spark, dir())
+    wh.append(Warehouse.Files, runIds(400, "a"))
+    wh.rewriteForRuns(Warehouse.Files, Seq("a-1"), _.filter(col("runId") =!= "a-1"))
+    jobsIn(wh.read(Warehouse.Files))._2 shouldBe 0
+    jobsIn(wh.readForRuns(Warehouse.Files, Seq("a-2", "a-3")))._2 shouldBe 0
+    jobsIn(wh.readVersion(Warehouse.Files, 0))._2 shouldBe 0
+    wh.readVersion(Warehouse.Files, 0).count() shouldBe 400
+    wh.read(Warehouse.Files).count() shouldBe 399
+  }
+
+  it should "leave a snapshot with no data file to spark.read.parquet and its error" in {
+    val wh = new Warehouse(spark, dir())
+    wh.overwrite("t", frame(0))
+    val v = versionDir(wh, "t")
+    Files.list(v).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet")).foreach(p => Files.delete(p))
+    LocalParquet.openSnapshot(spark, v) shouldBe None
+    val viaSpark = the[Exception] thrownBy spark.read.parquet(v.toString)
+    val viaRead = the[Exception] thrownBy wh.read("t")
+    viaRead.getClass shouldBe viaSpark.getClass
+    viaRead.getMessage shouldBe viaSpark.getMessage
+  }
+
+  it should "re-list from disk on refreshByPath" in {
+    val wh = new Warehouse(spark, dir())
+    wh.append("t", frame(0))
+    val df = wh.read("t").cache()
+    try {
+      df.count() shouldBe 10
+      wh.append("t", frame(1))
+      df.count() shouldBe 10
+      spark.catalog.refreshByPath(versionDir(wh, "t").toString)
+      df.count() shouldBe 20
+    } finally df.unpersist()
   }
 }
